@@ -23,40 +23,10 @@ import org.apache.spark.sql.functions._
   * REGARDLESS of component diameter — a 1000-node boilerplate chain (the
   * adversarial shape real crawl corpora produce) converges in ~2·log₂(n)
   * rounds where plain min-label propagation needs 1000. Lineage is
-  * truncated per round with checkpoints (iterative plans otherwise grow
-  * exponentially and re-execute prior rounds).
+  * truncated per round with [[graft.Materialize.truncate]] (iterative
+  * plans otherwise grow exponentially and re-execute prior rounds).
   */
 object Components {
-
-  /** Truncate lineage between rounds: a RELIABLE checkpoint when the
-    * session has a checkpoint dir (survives executor loss — required on a
-    * real cluster), else an eager localCheckpoint (fine on local[n],
-    * where executor loss means the app is gone anyway). */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Best-effort removal of an intermediate frame's RELIABLE checkpoint
-    * files once nothing downstream can reference them (the successor
-    * round is already materialized into its own checkpoint). Without
-    * this, every round leaks a full copy of the edge set to the
-    * checkpoint dir (`spark.cleaner...cleanCheckpoints` defaults off).
-    *
-    * The checkpointed RDD must be taken from the `LogicalRDD` leaf that
-    * `df.checkpoint(true)` produced — `queryExecution.toRdd` returns a
-    * fresh projection RDD *derived* from it, whose `getCheckpointFile`
-    * is always None (so deleting via toRdd would silently never fire). */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    try {
-      val files = df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
-      }.flatten
-      files.foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          .delete(path, true): Unit
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** One large-star phase over canonically-oriented edges (src > dst):
     * every strictly-larger neighbour of u is rewired to
@@ -114,7 +84,7 @@ object Components {
     // checkpoint is deliberately kept alive for the whole function (the
     // returned labels frame reads `nodes` from it lazily) — the same
     // leaked-until-caller-done contract the final edge checkpoint has.
-    val p0 = truncate(pairs.select(col("id_a"), col("id_b")))
+    val p0 = graft.Materialize.truncate(pairs.select(col("id_a"), col("id_b")))
     // Every id appearing in any pair (self-pairs count as singletons).
     // Lazy on purpose: scanned exactly once, inside the final label join —
     // a standalone materialize would be a whole extra job for one scan.
@@ -152,7 +122,7 @@ object Components {
       converged = isStar(next)
       // Round 1's input is a lazy view over p0 (whose checkpoint must
       // outlive this function) — only round outputs are dropped here.
-      if (iter > 0) dropCheckpoint(edges)
+      if (iter > 0) graft.Materialize.dropCheckpoint(edges)
       edges = next
       iter += 1
     }

@@ -44,7 +44,7 @@ import org.apache.spark.sql.types.DecimalType
   * adjacency's partitioning, and the contribution aggregation combines
   * map-side (decimal sums are associative) so the per-iteration exchange
   * carries ≤ distinct-dst rows per partition, not edge rows. Lineage is
-  * truncated per round (the Components checkpoint discipline) — iterative
+  * truncated per round ([[graft.Materialize.truncate]]) — iterative
   * plans otherwise grow exponentially and re-execute every prior round.
   *
   * Reference scope note: the reference toolkit has no graph module; this
@@ -52,30 +52,6 @@ import org.apache.spark.sql.types.DecimalType
   * built on the public algorithm.
   */
 object PageRank {
-
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Release a PRIOR round's materialization once its successor is
-    * eagerly checkpointed (nothing references it anymore): reliable
-    * checkpoint files delete, localCheckpoint caches unpersist — a
-    * DataFrame.unpersist() alone is a no-op for both, so without this a
-    * k-iteration walk holds k node-frames (the Components.dropCheckpoint
-    * lesson). Best-effort: a failure costs memory, not correctness. */
-  private def dropRound(df: DataFrame): Unit =
-    try {
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach { r =>
-        r.getCheckpointFile.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(path, true): Unit
-        }
-        r.unpersist(blocking = false): Unit
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Ranks after `iterations` rounds: one row per node, columns
     * (`node` long, `rank` double, `scale`-dp). */
@@ -155,8 +131,11 @@ object PageRank {
       // checkpoint=false keeps the lazy iteration plan visible (plan
       // pins, tiny graphs); real runs MUST truncate or the plan re-runs
       // every prior round.
-      val next = if (checkpoint) truncate(iterated) else iterated
-      if (checkpoint) prev.foreach(dropRound)
+      val next = if (checkpoint) graft.Materialize.truncate(iterated) else iterated
+      // release the prior round once its successor is eagerly
+      // checkpointed: unpersist() alone is a no-op on a checkpoint, so a
+      // k-iteration walk would otherwise hold k node-frames
+      if (checkpoint) prev.foreach(graft.Materialize.release)
       prev = Some(next)
       r = next
     }

@@ -847,7 +847,7 @@ object NearDupQueries {
         val combined = graft.sim.IvfPq.build(ivf, pq)
         val tmp = scratchIndexDir(s, "ivfpq-q", dir)
         graft.sim.IvfPq.writeIndex(combined, tmp)
-        ivf.release(); pq.release(); combined.coCodes.unpersist(false)
+        combined.release() // the composite owns ivf, pq and coCodes
         val reopened = graft.sim.IvfPq.readIndex(s, tmp)
         graft.sim.IvfPq.topK(reopened, e.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10, nprobe = 2)
@@ -868,8 +868,9 @@ object NearDupQueries {
         val pq = graft.sim.Pq.train(even, "vec_id", "embedding",
           m = 16, ks = 16, iters = 1)
         val tmp = scratchIndexDir(s, "ivfpq-app-q", dir)
-        graft.sim.IvfPq.writeIndex(graft.sim.IvfPq.build(ivf, pq), tmp)
-        ivf.release(); pq.release()
+        val built = graft.sim.IvfPq.build(ivf, pq)
+        graft.sim.IvfPq.writeIndex(built, tmp)
+        built.release()
         graft.sim.IvfPq.appendToIndex(s, tmp,
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
         val reopened = graft.sim.IvfPq.readIndex(s, tmp)

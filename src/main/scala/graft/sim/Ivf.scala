@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    refined with Lloyd rounds where assignment is an EQUI-JOIN on the
   *    coarse cell id — each row scores only its own cell's ~√K
   *    sub-centroids, so per-row cost is O(√K·dim), not O(K·dim). The fine
-  *    centroid table lives as a cached K-row DataFrame and is never
+  *    centroid table lives as a pinned K-row DataFrame and is never
   *    collected; its Lloyd update is a distributed
   *    posexplode → groupBy(cid,pos) → avg → re-assemble pass.
   *  - **Index**: corpus tagged with its fine cell id. At 100 TB you write
@@ -61,27 +61,27 @@ object Ivf {
                            iters: Int, seed: Long)
 
   /** `coarse`: Kc rows (_gf_ccid, _gf_ccv). `cells`: ≈K rows
-    * (_gf_ccid, _gf_cid, _gf_cv), cached. `indexed`: corpus rows
-    * (_gf_cid, _gf_id, _gf_v). `meta`: train-time parameters — always
-    * present for [[train]]ed and [[readIndex]]-ed indices; None only for
-    * hand-assembled frames (then dim validation is skipped). */
+    * (_gf_ccid, _gf_cid, _gf_cv). `indexed`: corpus rows
+    * (_gf_cid, _gf_id, _gf_v). [[train]] returns all three materialized
+    * (`cells` and `indexed` pinned as leaf plans, see
+    * [[graft.Materialize]]), owned by [[release]]. `meta`: train-time
+    * parameters — always present for [[train]]ed and [[readIndex]]-ed
+    * indices; None only for hand-assembled frames (then dim validation is
+    * skipped). */
   final case class IvfIndex(coarse: DataFrame, cells: DataFrame,
                             indexed: DataFrame,
                             meta: Option[IvfMeta] = None) {
     /** Number of fine cells actually trained (≈ the requested k). */
-    def numCells: Long = cells.count()
+    def numCells: Long = graft.Materialize.rows(cells)
 
-    /** Release the cached centroid frames. [[train]] caches `coarse` and
-      * `cells` for the lifetime of the session (every probe re-reads
-      * them); a long-lived driver that trains repeatedly must call this
-      * once the index (or anything derived from its lazy `indexed` plan)
-      * is no longer needed, or cached blocks accumulate per train() call.
-      * Blocking=false: outstanding jobs finish their reads. */
-    def release(): Unit = {
-      coarse.unpersist(false)
-      cells.unpersist(false)
-      ()
-    }
+    /** Release the materialized frames. [[train]] holds `coarse`,
+      * `cells` and `indexed` for the lifetime of the session (every probe
+      * re-reads them); a long-lived driver that trains repeatedly must
+      * call this once the index is no longer needed, or stored blocks
+      * accumulate per train() call. Probing afterwards stays correct but
+      * recomputes. Non-blocking: outstanding jobs finish their reads. */
+    def release(): Unit =
+      Seq(coarse, cells, indexed).foreach(graft.Materialize.release)
   }
 
   private def cosDist(v: Column, c: Column): Column =
@@ -148,21 +148,25 @@ object Ivf {
     // substantial at any scale while the same rule yields thousands of
     // healthy partitions at 100 TB; HASH partitioning by _gf_id both
     // skips round-robin's sort-before-repartition guard and lets the
-    // per-round assignment groupBy(_gf_id) reuse the partitioning. The
-    // persist is released before returning; one count job materializes
-    // it (the kc > 1 quota path needed that count anyway).
-    val base0 = corpus.select(col(idCol).as("_gf_id"), col(vecCol).as("_gf_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = base0.count()
+    // per-round assignment groupBy(_gf_id) reuse the partitioning.
+    //
+    // Every frame the loop re-reads is PINNED (graft.Materialize: eager,
+    // leaf plan) rather than cached: a cached frame keeps its input's
+    // plan, so each Lloyd round would nest every previous round and the
+    // caller's corpus plan, and adaptive execution re-renders that
+    // (multi-MB) plan string at every stage update. Pins are released
+    // before returning, except `cells` and `indexed`, which the index
+    // owns. The pin's row count is the corpus size the quota path needs.
+    val base0 = graft.Materialize.pin(
+      corpus.select(col(idCol).as("_gf_id"), col(vecCol).as("_gf_v")))
+    val nRows = graft.Materialize.rows(base0)
     val loopParts = math.max(1L, math.min(nRows / 65536L + 1L,
       spark.sparkContext.defaultParallelism.toLong * 16L)).toInt
     val base =
       if (loopParts >= base0.rdd.getNumPartitions) base0
       else {
-        val re = base0.repartition(loopParts, col("_gf_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        re.count(): Unit // materialize before releasing the wide cache
-        base0.unpersist(false)
+        val re = graft.Materialize.pin(base0.repartition(loopParts, col("_gf_id")))
+        graft.Materialize.release(base0)
         re
       }
 
@@ -206,14 +210,13 @@ object Ivf {
     val coarse = coarseDf(coarseSeq).cache()
     // Training touches the coarse assignment for the quota count, the seed
     // materialization, every fine Lloyd round, and the final assignment —
-    // persist it for the duration (MEMORY_AND_DISK: corpus-sized, so it
-    // spills instead of OOMing; at extreme scale checkpoint to storage
-    // instead) and release it before returning. The kc == 1 path is a
-    // constant column over the already-persisted `base` — no second
-    // corpus-sized cache needed.
+    // pin it for the duration (MEMORY_AND_DISK: corpus-sized, so it
+    // spills instead of OOMing) and release it before returning. The
+    // kc == 1 path is a constant column over the already-pinned `base` —
+    // no second corpus-sized copy needed.
     val baseC = if (kc == 1) base.withColumn("_gf_ccid", lit(0))
-                else assignCoarse(base, coarse) // (_gf_id, _gf_v, _gf_ccid)
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                else graft.Materialize.pin(
+                  assignCoarse(base, coarse)) // (_gf_id, _gf_v, _gf_ccid)
 
     // ---- fine level: per-cell sub-centroids, never collected ----
     val rankW = Window.partitionBy("_gf_ccid")
@@ -222,7 +225,7 @@ object Ivf {
       if (kc == 1) {
         // distributed top-k by hash (TakeOrdered — no single-partition
         // window over the corpus); the per-cell window then ranks only
-        // these k rows. Reads the persisted baseC (same rows, constant
+        // these k rows. Reads the pinned baseC (same rows, constant
         // _gf_ccid = 0 already attached) instead of re-scanning.
         baseC.orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
           .limit(k).withColumn("_gf_q", lit(k))
@@ -244,16 +247,15 @@ object Ivf {
           .select("_gf_ccid", "_gf_q")
         baseC.join(broadcast(quota), Seq("_gf_ccid"))
       }
-    var cells = seedCandidates
+    var cells = graft.Materialize.pin(seedCandidates
       .withColumn("_gf_rk", row_number().over(rankW))
       .filter(col("_gf_rk") <= col("_gf_q"))
       .select(col("_gf_ccid"),
         (col("_gf_ccid").cast("long") * k + (col("_gf_rk") - 1)).as("_gf_cid"),
-        col("_gf_v").as("_gf_cv"))
-      .cache()
-    // the materializing count doubles as the cell tally for the manifest
+        col("_gf_v").as("_gf_cv")))
+    // the pin's row count doubles as the cell tally for the manifest
     // (Lloyd's left join preserves the row set, so it never changes)
-    var nCells = cells.count()
+    val nCells = graft.Materialize.rows(cells)
 
     for (_ <- 1 to iters) {
       val assigned = assignFine(baseC, cells) // (_gf_id, _gf_v, _gf_cid)
@@ -267,21 +269,18 @@ object Ivf {
         .agg(transform(array_sort(collect_list(struct(col("_gf_pos"), col("_gf_m")))),
           s => s.getField("_gf_m").cast("float")).as("_gf_nv"))
       // empty fine cells keep their previous centroid
-      val next = cells.join(means, Seq("_gf_cid"), "left")
+      val next = graft.Materialize.pin(cells.join(means, Seq("_gf_cid"), "left")
         .select(col("_gf_ccid"), col("_gf_cid"),
-          coalesce(col("_gf_nv"), col("_gf_cv")).as("_gf_cv"))
-        .cache()
-      nCells = next.count()
-      cells.unpersist()
+          coalesce(col("_gf_nv"), col("_gf_cv")).as("_gf_cv")))
+      graft.Materialize.release(cells)
       cells = next
     }
 
-    val indexed = assignFine(baseC, cells)
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_v"))
-    // training is done with base/baseC; consumers of the (lazy) indexed
-    // plan recompute the assignment once per action, as before
-    if (kc > 1) baseC.unpersist(false)
-    base.unpersist(false)
+    // the final assignment, pinned so that writes and probes read it
+    // instead of re-running it; training is then done with base/baseC
+    val indexed = graft.Materialize.pin(assignFine(baseC, cells)
+      .select(col("_gf_cid"), col("_gf_id"), col("_gf_v")))
+    Seq(baseC, base).foreach(graft.Materialize.release)
     val dim = coarseSeq.headOption.map(_.length).getOrElse(0)
     IvfIndex(coarse, cells, indexed,
       Some(IvfMeta(dim, kc, nCells, "cosine", iters, seed)))

@@ -42,42 +42,38 @@ import org.apache.spark.sql.functions._
 object IvfPq {
 
   /** `coCodes`: corpus rows (_gf_cid, _gf_id, _gf_code) — the inverted
-    * lists with byte codes in place of vectors. */
+    * lists with byte codes in place of vectors. [[build]] returns it
+    * materialized (pinned as a leaf plan, see [[graft.Materialize]]),
+    * owned by [[release]]. */
   final case class IvfPqIndex(ivf: Ivf.IvfIndex, pq: Pq.PqIndex,
                               coCodes: DataFrame) {
-    /** Unpersist the composite's cache and both children's (idempotent;
-      * probing afterwards recomputes instead of reading the cache). */
+    /** Release the composite's frame and both children's (idempotent;
+      * probing afterwards recomputes instead of reading stored rows). */
     def release(): Unit = {
-      coCodes.unpersist(false)
+      graft.Materialize.release(coCodes)
       ivf.release()
       pq.release()
-      ()
     }
   }
 
   /** Join each vector's fine cell id with its PQ code (one build-time
-    * shuffle on the id) and cache the result — the compressed inverted
+    * shuffle on the id) and pin the result — the compressed inverted
     * file every probe scans. Both inputs must come from the same corpus:
     * a row present in one index but not the other is index corruption,
     * and the inner join would silently drop it — so build COUNTS both
-    * sides and raises on mismatch (one extra pair of count jobs at build
-    * time, on the same cached frames the join reads anyway). */
+    * sides and raises on mismatch (free on [[Ivf.train]]/[[Pq.train]]
+    * output: a pinned frame knows its row count; re-opened indexes pay
+    * one count job per side). */
   def build(ivf: Ivf.IvfIndex, pq: Pq.PqIndex): IvfPqIndex = {
-    // `ivf.indexed` is a lazy assignment subplan (join + two aggregates
-    // over the corpus); it feeds BOTH the join and the integrity count —
-    // persist it for the build's duration so the assignment runs once
-    // (r15; released below once coCodes is materialized).
-    val cells = ivf.indexed.select(col("_gf_cid"), col("_gf_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val coCodes = cells.join(pq.codes, Seq("_gf_id"))
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_code"))
-      .cache()
+    val coCodes = graft.Materialize.pin(
+      ivf.indexed.select(col("_gf_cid"), col("_gf_id"))
+        .join(pq.codes, Seq("_gf_id"))
+        .select(col("_gf_cid"), col("_gf_id"), col("_gf_code")))
     // both directions: a SUBSET index joins cleanly against the larger
     // one, so comparing the join count to only one side would miss it
-    val joined = coCodes.count()
-    val nPq = pq.codes.count()
-    val nIvf = cells.count()
-    cells.unpersist(false)
+    val joined = graft.Materialize.rows(coCodes)
+    val nPq = graft.Materialize.rows(pq.codes)
+    val nIvf = graft.Materialize.rows(ivf.indexed)
     if (joined != nPq || joined != nIvf) throw new IllegalArgumentException(
       s"IvfPq.build: IVF and PQ indexes disagree — $nIvf cell-assigned " +
         s"vectors, $nPq coded vectors, $joined joined rows; the indexes " +
@@ -141,20 +137,20 @@ object IvfPq {
 
   /** Residual IVFADC index: `coCodes` quantizes residuals, `offsets` is
     * the K-row (_gf_cid, _gf_off) per-cell centering table both the
-    * encode and every probe subtract — cached, broadcast-sized (cells ×
-    * dim doubles, same budget as the fine-centroid table itself). */
+    * encode and every probe subtract — broadcast-sized (cells × dim
+    * doubles, same budget as the fine-centroid table itself).
+    * [[buildResidual]] returns both pinned (leaf plans, see
+    * [[graft.Materialize]]), owned by [[release]]. */
   final case class IvfPqResidualIndex(ivf: Ivf.IvfIndex, pq: Pq.PqIndex,
                                       coCodes: DataFrame, offsets: DataFrame) {
-    /** Unpersist this index's own cached frames AND the child indexes'
-      * (the composite owns the lot — a caller holding only this handle
-      * has no other way to reach them). Probing after release stays
-      * correct but recomputes per probe. */
+    /** Release this index's own materialized frames AND the child
+      * indexes' (the composite owns the lot — a caller holding only this
+      * handle has no other way to reach them). Probing after release
+      * stays correct but recomputes per probe. */
     def release(): Unit = {
-      coCodes.unpersist(false)
-      offsets.unpersist(false)
+      Seq(coCodes, offsets).foreach(graft.Materialize.release)
       ivf.release()
       pq.release()
-      ()
     }
   }
 
@@ -179,15 +175,13 @@ object IvfPq {
   def buildResidual(ivf: Ivf.IvfIndex, m: Int, ks: Int = 256,
                     iters: Int = 3, seed: Long = 42L,
                     trainSample: Int = 0): IvfPqResidualIndex = {
-    // `ivf.indexed` is a lazy assignment subplan; unpersisted, every
-    // consumer below (offset aggregate, PQ train sample, encode, coCodes
-    // join, integrity count) re-ran the whole corpus assignment — five
-    // executions measured ~6.7 s of ann_recall's build phase at sf0.1.
-    // Persist the normalized frame once for the build (released below).
-    val normed = ivf.indexed.select(col("_gf_cid"), col("_gf_id"),
-        GraftFunctions.vecNormalize(col("_gf_v")).as("_gf_nv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = normed
+    // Every consumer below (offset aggregate, PQ train sample, encode,
+    // coCodes join, integrity count) reads the normalized corpus: pin it
+    // once for the build (released below), and pin the two frames the
+    // index keeps, so no plan nests the caller's (graft.Materialize).
+    val normed = graft.Materialize.pin(ivf.indexed.select(col("_gf_cid"),
+      col("_gf_id"), GraftFunctions.vecNormalize(col("_gf_v")).as("_gf_nv")))
+    val offsets = graft.Materialize.pin(normed
       .select(col("_gf_cid"), posexplode(col("_gf_nv")).as(Seq("_gf_pos", "_gf_x")))
       .groupBy("_gf_cid", "_gf_pos")
       // exact quantized-long mean (graft.Num.qmean): a raw avg(double)'s
@@ -197,21 +191,20 @@ object IvfPq {
       .groupBy("_gf_cid")
       .agg(transform(
         array_sort(collect_list(struct(col("_gf_pos"), col("_gf_mx")))),
-        s => s.getField("_gf_mx")).as("_gf_off"))
-      .cache()
+        s => s.getField("_gf_mx")).as("_gf_off")))
     val residuals = normed
       .join(broadcast(offsets), Seq("_gf_cid"))
       .select(col("_gf_cid"), col("_gf_id"),
         zip_with(col("_gf_nv"), col("_gf_off"), (a, b) => a - b).as("_gf_rv"))
     val pq = Pq.train(residuals, "_gf_id", "_gf_rv", m, ks, iters, seed,
       trainSample, normalize = false)
-    val coCodes = residuals.select(col("_gf_cid"), col("_gf_id"))
-      .join(pq.codes, Seq("_gf_id"))
-      .select(col("_gf_cid"), col("_gf_id"), col("_gf_code"))
-      .cache()
-    val joined = coCodes.count()
-    val nIvf = normed.count() // same rows as ivf.indexed, off the cache
-    normed.unpersist(false)
+    val coCodes = graft.Materialize.pin(
+      residuals.select(col("_gf_cid"), col("_gf_id"))
+        .join(pq.codes, Seq("_gf_id"))
+        .select(col("_gf_cid"), col("_gf_id"), col("_gf_code")))
+    val joined = graft.Materialize.rows(coCodes)
+    val nIvf = graft.Materialize.rows(normed) // same rows as ivf.indexed
+    graft.Materialize.release(normed)
     if (joined != nIvf) throw new IllegalArgumentException(
       s"IvfPq.buildResidual: $nIvf indexed vectors but $joined coded rows " +
         "— ids collide or the encode dropped rows")

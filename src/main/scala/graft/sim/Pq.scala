@@ -54,21 +54,20 @@ object Pq {
 
   /** `codebooks`: m×ks rows (_gf_m, _gf_c, _gf_cbv: array<double>) —
     * broadcast-sized. `codes`: corpus rows (_gf_id, _gf_code: binary of
-    * m bytes). [[train]] marks both cached — codes are the compressed
-    * corpus (id + m bytes per row: the artifact built to be RAM-resident;
-    * at 10⁹ vectors × m=16 that is ~24 GB across a cluster), so repeated
-    * probes scan memory instead of re-running the encode pass. A
-    * long-lived driver that trains repeatedly must [[release]] — the same
-    * contract as [[Ivf.IvfIndex.release]]. */
+    * m bytes). [[train]] returns both materialized (`codebooks` cached,
+    * `codes` pinned as a leaf plan, see [[graft.Materialize]]), owned by
+    * [[release]] — codes are the compressed corpus (id + m bytes per row:
+    * the artifact built to be RAM-resident; at 10⁹ vectors × m=16 that is
+    * ~24 GB across a cluster), so repeated probes scan memory instead of
+    * re-running the encode pass. A long-lived driver that trains
+    * repeatedly must [[release]] — the same contract as
+    * [[Ivf.IvfIndex.release]]. */
   final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
                            meta: PqMeta) {
-    /** Unpersist the cached codebook + code frames (blocking=false:
-      * outstanding jobs finish their reads). */
-    def release(): Unit = {
-      codebooks.unpersist(false)
-      codes.unpersist(false)
-      ()
-    }
+    /** Release the codebook + code frames (non-blocking: outstanding jobs
+      * finish their reads; probing afterwards recomputes). */
+    def release(): Unit =
+      Seq(codebooks, codes).foreach(graft.Materialize.release)
   }
 
   /** L2-normalize to array<double> — the native
@@ -120,7 +119,7 @@ object Pq {
     * Codebooks are trained on a bounded deterministic SAMPLE
     * (`trainSample` hash-top rows, default 128·ks — the PQ paper's own
     * regime: codebooks for a billion-vector index train on ~10⁵ samples):
-    * the Lloyd loop touches only the cached sample, so its per-round cost
+    * the Lloyd loop touches only the pinned sample, so its per-round cost
     * is independent of corpus size, and the full corpus is read exactly
     * once, by the final [[encode]] pass. `trainSample` > 0 overrides the
     * sample size (it is clamped to at least ks); the 128·ks default
@@ -143,10 +142,11 @@ object Pq {
     val base = corpus.select(col(idCol).as("_gf_id"),
       prepped(col(vecCol), normalize).as("_gf_nv"))
     // deterministic hash-top sample (TakeOrdered — one corpus pass, no
-    // corpus-wide window); cached for the duration of the Lloyd loop
-    val trainBase = base
+    // corpus-wide window); pinned for the duration of the Lloyd loop (a
+    // leaf plan: every round's plan stays sample-sized, not corpus-sized)
+    val trainBase = graft.Materialize.pin(base
       .orderBy(xxhash64(col("_gf_id"), lit(seed)), col("_gf_id"))
-      .limit(sampleN).cache()
+      .limit(sampleN))
     val sub = trainBase
       .select(col("_gf_id"), subspaces(col("_gf_nv"), m, ds).as("_gf_s"))
       .select(col("_gf_id"), col("_gf_s._gf_m").as("_gf_m"),
@@ -189,10 +189,11 @@ object Pq {
         (mm, c, means.getOrElse((mm, c), old))
       }
     }
-    trainBase.unpersist(false)
+    graft.Materialize.release(trainBase)
 
     val codebooks = cbDf().cache()
-    val codes = encode(corpus, idCol, vecCol, codebooks, m, ds, normalize).cache()
+    val codes = graft.Materialize.pin(
+      encode(corpus, idCol, vecCol, codebooks, m, ds, normalize))
     PqIndex(codebooks, codes,
       PqMeta(dim, m, ks, iters, seed,
         if (normalize) "cosine-l2adc" else "l2adc-residual"))

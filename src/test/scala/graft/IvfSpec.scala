@@ -71,10 +71,35 @@ class IvfSpec extends SparkSpec {
   }
 
   test("plan pin: assignment is a join + min-aggregate, no K-literal projection") {
-    def planOf(k: Int) = {
+    // `indexed` comes back pinned (a leaf plan), so the assignment plan is
+    // read from the execution that materialized it during train: the one
+    // whose plan reads the final `cells` leaf
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    def leafRdds(p: LogicalPlan) = p.collect { case lr: LogicalRDD => lr.rdd.id }
+    def planOf(k: Int): LogicalPlan = {
       val df = clustered.toDF("vec_id", "embedding")
-      Ivf.train(df, "vec_id", "embedding", k = k, iters = 1)
-        .indexed.queryExecution.optimizedPlan
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe): Unit
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val index = Ivf.train(df, "vec_id", "embedding", k = k, iters = 1)
+        val cellsRdd = leafRdds(index.cells.queryExecution.analyzed)
+        assert(cellsRdd.size == 1)
+        def assignment = seen.toArray(Array.empty[QueryExecution]).find { qe =>
+          qe.analyzed.output.map(_.name) == Seq("_gf_cid", "_gf_id", "_gf_v") &&
+            leafRdds(qe.analyzed).contains(cellsRdd.head)
+        }
+        val deadline = System.nanoTime() + 30000000000L // listener bus is async
+        while (assignment.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        val plan = assignment.getOrElse(fail("no execution materialized indexed"))
+          .optimizedPlan
+        index.release()
+        plan
+      } finally spark.listenerManager.unregister(listener)
     }
     val plan = planOf(9)
     val joins = plan.collect {
